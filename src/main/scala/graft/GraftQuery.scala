@@ -41,8 +41,17 @@ object GraftQuery {
     * result against this and report loudly past it — a future corpus-sized
     * ordered result surfaces at declaration time instead of silently
     * serializing through one task toward the 2 GB partition limits. */
-  private[graft] val DesampleMaxRows: Long =
-    sys.env.get("GRAFT_DESAMPLE_MAX_ROWS").map(_.toLong).getOrElse(10L * 1000 * 1000)
+  private[graft] lazy val DesampleMaxRows: Long =
+    envLong("GRAFT_DESAMPLE_MAX_ROWS", 10L * 1000 * 1000)
+
+  /** A whole-number environment variable, `default` when unset; a bad
+    * value fails with the variable's name and the value, not a bare
+    * NumberFormatException. */
+  private[graft] def envLong(name: String, default: Long): Long =
+    sys.env.get(name).fold(default) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$name must be a whole number, got '$v'"))
+    }
 
   /** Non-empty message when a desampled query's executed row count breaks
     * the driver-bounded-result invariant the rewrite relies on. */

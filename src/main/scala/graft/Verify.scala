@@ -1,11 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // a bad GRAFT_DESAMPLE_MAX_ROWS fails here, naming the variable
+    GraftQuery.DesampleMaxRows: Unit
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,25 +34,32 @@ object Verify {
       // a stale marker from a previous run into a reused outDir must not
       // outlive the retry that fixed it — the marker reflects THIS attempt
       Files.deleteIfExists(Paths.get(s"$outDir/$name.ERROR")): Unit
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // desample guard: the single-partition final-sort rewrite assumes
-        // driver-bounded results — surface a breach loudly at declaration
-        // time (count over the written files; footer-metadata cheap)
-        GraftQuery
+      // only the write decides whether the query passed; the per-invocation
+      // checkpoint scratch is freed either way (r16 advice: unreleased
+      // blocks accumulate across the 109-query dump)
+      val wrote =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          true
+        } catch { case e: Throwable =>
+          val msg = s"${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"[verify] $name failed: $msg")
+          failed(name) = msg
+          Files.writeString(Paths.get(s"$outDir/$name.ERROR"), msg + "\n")
+          false
+        } finally ScratchFrames.release()
+      // desample guard: the single-partition final-sort rewrite assumes
+      // driver-bounded results — surface a breach loudly at declaration
+      // time (count over the written files; footer-metadata cheap). A
+      // diagnostic: a failed read is reported, never a failed query.
+      if (wrote)
+        try GraftQuery
           .desampleOverflow(name, spark.read.parquet(s"$outDir/$name").count())
           .foreach(msg => System.err.println(s"[verify] DESAMPLE OVERFLOW $msg"))
-        // free this query's per-invocation checkpoint scratch (r16 advice:
-        // unreleased blocks accumulate across the 109-query dump)
-        ScratchFrames.release()
-      } catch { case e: Throwable =>
-        ScratchFrames.release()
-        val msg = s"${e.getClass.getName}: ${e.getMessage}"
-        System.err.println(s"[verify] $name failed: $msg")
-        failed(name) = msg
-        Files.writeString(Paths.get(s"$outDir/$name.ERROR"), msg + "\n")
-      }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name: desample check skipped: $e")
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

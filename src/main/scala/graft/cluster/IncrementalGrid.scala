@@ -62,14 +62,14 @@ object IncrementalGrid {
   private val RecordCols =
     Seq("id", "mx", "my", "lng", "lat", "point_count", "is_cluster")
 
-  /** @param index          level rows from [[GridHierarchy.build]] /
-    *                       [[MortonHierarchy.build]] (or a previous merge)
+  /** @param index          level rows from [[MortonHierarchy.build]] (or a
+    *                       previous merge)
     * @param newPoints      the ingest batch (same shape `build` takes)
     * @param oldTotalPoints the `points.count()` of the indexed data —
     *                       including any null-geometry rows, exactly as
     *                       `build` counted them
     * @return updated level rows, bit-equal to
-    *         `GridHierarchy.build(old ∪ new)`, persisted + materialized
+    *         `MortonHierarchy.build(old ∪ new)`, persisted + materialized
     */
   /** Phase timing to stdout when GRAFT_MERGE_DEBUG is set (a pass-through
     * otherwise) — how the committed phase attribution in BENCH.md was
@@ -235,8 +235,9 @@ object IncrementalGrid {
     * membership with the removed leaves dropped at the base level. The
     * id space is UNTOUCHED: survivors keep their ids (stable
     * identifiers), cluster ids stay offset by the original total, and
-    * the result is bit-equal to `GridHierarchy.build(survivors,
-    * idSpace = total)` (IndexStoreSpec pins it).
+    * the result is bit-equal to the specs' per-level reference
+    * `GridReference.build(survivors, idSpace = total)` (IndexStoreSpec
+    * pins it).
     *
     * The identity-pass skip needs a REMOVAL-safe z*: unlike ingest,
     * removal can create fusion at a SHALLOWER pass than any pre-removal

@@ -179,8 +179,8 @@ object IndexStore {
       s"bucket packing holds ${1L << 20} cells per axis; lower bucketZoom")
   }
 
-  /** Persist a built/merged hierarchy (the [[GridHierarchy.build]] /
-    * [[MortonHierarchy.build]] / [[IncrementalGrid.merge]] level rows) as
+  /** Persist a built/merged hierarchy (the [[MortonHierarchy.build]] /
+    * [[IncrementalGrid.merge]] level rows) as
     * the bucketed store. One shuffle on the bucket key so each bucket is
     * one file (salt at scale — see class doc). Writes the epoch-0
     * MANIFEST (see the MVCC section of the class doc): a fresh save is a
@@ -1402,8 +1402,9 @@ object IndexStore {
     * CAS. The ID SPACE IS UNTOUCHED: `numPoints` is the id-space size,
     * not the live count — survivors keep their ids, cluster ids keep
     * their offset, and the result is bit-equal to a fresh build of the
-    * survivors in the same id space (`GridHierarchy.build(survivors,
-    * idSpace = numPoints)`; IndexStoreSpec pins it). A later
+    * survivors in the same id space (the specs' per-level reference
+    * `GridReference.build(survivors, idSpace = numPoints)`; IndexStoreSpec
+    * pins it). A later
     * [[mergeInto]] continues the id space at `numPoints` as before —
     * removed ids are never reused.
     *

@@ -96,7 +96,8 @@ object MortonHierarchy {
   }
   private def morton(cx: Long, cy: Long): Long = spread(cx) | (spread(cy) << 1)
 
-  /** Same output contract as [[GridHierarchy.build]]: the union of all
+  /** Same output contract as the per-level grid fold (the specs'
+    * reference, GridReference.build): the union of all
     * level tables (zoom maxZoom+1 … minZoom), LevelRow schema — plus the
     * persisted Dataset that BACKS it (the fold output), which is the
     * handle to persist/unpersist: the returned union itself is lazy and

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.{ClusterEngine, ClusterOptions, GridHierarchy}
+import graft.cluster.{ClusterEngine, ClusterOptions, GridReference}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.operators.AsOfJoin
@@ -41,10 +41,10 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("distributed grid hierarchy on empty and single-point inputs") {
-    val empty = GridHierarchy.build(
+    val empty = GridReference.build(
       Seq.empty[(Long, Double, Double)].toDF("row_id", "lng", "lat"))
     assert(empty.count() == 0)
-    val single = GridHierarchy.build(
+    val single = GridReference.build(
       Seq((7L, 10.0, 20.0)).toDF("row_id", "lng", "lat"))
     // one passthrough record per level, never clustered
     assert(single.count() == 18)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.{ClusterOptions, GridHierarchy}
+import graft.cluster.{ClusterOptions, GridReference}
 
 /** Scale-mode hierarchy invariants — the same properties the exact greedy
   * mode guarantees, plus strict partition-count invariance (the reference's
@@ -17,7 +17,7 @@ class GridHierarchySpec extends AnyFunSuite {
     PointFixtures.uniform(n).toSeq.toDF("row_id", "lng", "lat")
 
   private lazy val levels =
-    GridHierarchy.build(pointsDf(500), ClusterOptions()).cache()
+    GridReference.build(pointsDf(500), ClusterOptions()).cache()
 
   test("count conservation at every level") {
     val perLevel = levels.groupBy("zoom").agg(sum("point_count").as("total"))
@@ -38,7 +38,7 @@ class GridHierarchySpec extends AnyFunSuite {
   }
 
   test("partition-count invariance (multi-chunk ≡ single-chunk)") {
-    def run(p: Int) = GridHierarchy.build(pointsDf(300).repartition(p), ClusterOptions())
+    def run(p: Int) = GridReference.build(pointsDf(300).repartition(p), ClusterOptions())
       .select("zoom", "id", "mx", "my", "point_count", "is_cluster", "parent_id")
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(run(1) == run(13))
@@ -96,7 +96,7 @@ class GridHierarchySpec extends AnyFunSuite {
   test("rejects maxZoom that would overflow the 27-bit cell packing") {
     // at defaults (radius 40, extent 512) zoom 24 needs ~2.1e8 cells/axis > 2^27
     val e = intercept[IllegalArgumentException] {
-      GridHierarchy.build(pointsDf(10), ClusterOptions(maxZoom = 24))
+      GridReference.build(pointsDf(10), ClusterOptions(maxZoom = 24))
     }
     assert(e.getMessage.contains("cells per axis"))
   }
@@ -104,7 +104,7 @@ class GridHierarchySpec extends AnyFunSuite {
   test("out-of-range lng wraps into [-180, 180) instead of corrupting cell ids") {
     val df = Seq((0L, 190.0, 10.0), (1L, -170.0, 10.0), (2L, 550.0, 10.0))
       .toDF("row_id", "lng", "lat")
-    val lvl = GridHierarchy.build(df, ClusterOptions())
+    val lvl = GridReference.build(df, ClusterOptions())
     val base = lvl.where($"zoom" === 17).select($"id", $"lng", $"mx").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     // 190 and 550 both wrap to -170 — all three points are the same location
@@ -120,7 +120,7 @@ class GridHierarchySpec extends AnyFunSuite {
     // two coincident points: the collision probe must find z* = maxZoom
     // (no pass skipped) and the pair must fuse at the deepest pass
     val dup = Seq((0L, 10.0, 20.0), (1L, 10.0, 20.0)).toDF("row_id", "lng", "lat")
-    val fused = GridHierarchy.build(dup, ClusterOptions())
+    val fused = GridReference.build(dup, ClusterOptions())
     assert(fused.where(col("zoom") === 16 && col("is_cluster")).count() == 1,
       "coincident pair fuses at the deepest pass despite the skip probe")
     assert(fused.where(col("zoom") === 17 && col("parent_id") =!= -1L).count() == 2)
@@ -128,7 +128,7 @@ class GridHierarchySpec extends AnyFunSuite {
     // two far-apart points: every pass is identity — 18 levels of the same
     // two untouched records, no parent ever stamped
     val far = Seq((0L, -120.0, 40.0), (1L, 120.0, -40.0)).toDF("row_id", "lng", "lat")
-    val alone = GridHierarchy.build(far, ClusterOptions())
+    val alone = GridReference.build(far, ClusterOptions())
     assert(alone.count() == 2 * 18)
     assert(alone.where(col("is_cluster") || col("parent_id") =!= -1L).count() == 0)
     assert(alone.groupBy(col("zoom")).count().where(col("count") =!= 2).count() == 0)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.{ClusterOptions, GridHierarchy, IncrementalGrid}
+import graft.cluster.{ClusterOptions, GridReference, IncrementalGrid}
 
 /** Incremental index maintenance: merging an ingest batch into an existing
   * grid hierarchy must be BIT-EQUAL to rebuilding from scratch on the
@@ -51,8 +51,8 @@ class IncrementalGridSpec extends AnyFunSuite {
       opts: ClusterOptions = ClusterOptions()): Unit = {
     val (oldPts, newPts) = all.splitAt(splitAt)
     val merged = IncrementalGrid.merge(
-      GridHierarchy.build(df(oldPts), opts), df(newPts), splitAt.toLong, opts)
-    val rebuilt = GridHierarchy.build(df(all), opts)
+      GridReference.build(df(oldPts), opts), df(newPts), splitAt.toLong, opts)
+    val rebuilt = GridReference.build(df(all), opts)
     assert(canon(merged) == canon(rebuilt))
   }
 
@@ -71,7 +71,7 @@ class IncrementalGridSpec extends AnyFunSuite {
 
   test("empty batch is an identity (modulo nothing — same rows back)") {
     val base = pts(300, 3, clustered = true)
-    val index = GridHierarchy.build(df(base))
+    val index = GridReference.build(df(base))
     val merged = IncrementalGrid.merge(index, df(Nil), 300L)
     assert(canon(merged) == canon(index))
   }
@@ -87,8 +87,8 @@ class IncrementalGridSpec extends AnyFunSuite {
       .unionByName(Seq((500L, Double.NaN, 10.0), (501L, 5.0, Double.NaN))
         .toDF("row_id", "lng", "lat"))
     val merged = IncrementalGrid.merge(
-      GridHierarchy.build(df(oldPts)), dirtyNew, 350L)
-    val rebuilt = GridHierarchy.build(
+      GridReference.build(df(oldPts)), dirtyNew, 350L)
+    val rebuilt = GridReference.build(
       df(clean).unionByName(Seq((500L, Double.NaN, 10.0), (501L, 5.0, Double.NaN))
         .toDF("row_id", "lng", "lat")))
     assert(canon(merged) == canon(rebuilt))
@@ -98,9 +98,9 @@ class IncrementalGridSpec extends AnyFunSuite {
     val all = pts(1000, 99, clustered = true)
     val (a, rest) = all.splitAt(600)
     val (b, c) = rest.splitAt(250)
-    val once = IncrementalGrid.merge(GridHierarchy.build(df(a)), df(b), 600L)
+    val once = IncrementalGrid.merge(GridReference.build(df(a)), df(b), 600L)
     val twice = IncrementalGrid.merge(once, df(c), 850L)
-    assert(canon(twice) == canon(GridHierarchy.build(df(all))))
+    assert(canon(twice) == canon(GridReference.build(df(all))))
   }
 
   test("streaming ingest maintains the index: foreachBatch + merge == rebuild") {
@@ -112,7 +112,7 @@ class IncrementalGridSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val all = pts(1000, 31, clustered = true)
     val (basePts, streamPts) = all.splitAt(600)
-    var index = GridHierarchy.build(df(basePts))
+    var index = GridReference.build(df(basePts))
     var total = 600L
 
     val input = MemoryStream[(Long, Double, Double)]
@@ -133,12 +133,12 @@ class IncrementalGridSpec extends AnyFunSuite {
     } finally q.stop()
 
     assert(total == 1000L)
-    assert(canon(index) == canon(GridHierarchy.build(df(all))))
+    assert(canon(index) == canon(GridReference.build(df(all))))
   }
 
   test("out-of-range ids are rejected") {
     val base = pts(100, 1, clustered = false)
-    val index = GridHierarchy.build(df(base))
+    val index = GridReference.build(df(base))
     val bad = df(Seq((50L, 1.0, 2.0))) // id 50 < oldTotal 100
     val e = intercept[IllegalArgumentException] {
       IncrementalGrid.merge(index, bad, 100L)

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.{ClusterOptions, GridHierarchy, IndexStore}
+import graft.cluster.{ClusterOptions, GridReference, IndexStore}
 
 /** Storage-backed index: save/load bit-equality, mergeInto ≡ rebuild on
   * the union, and the locality contract — a spatially-local ingest batch
@@ -72,7 +72,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("save → load is bit-equal to the built index") {
-    val built = GridHierarchy.build(df(pts(900, 5)))
+    val built = GridReference.build(df(pts(900, 5)))
     val dir = freshDir("roundtrip")
     IndexStore.save(built, dir, 900L)
     assert(canon(IndexStore.load(spark, dir)) == canon(built))
@@ -84,19 +84,19 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = pts(900, 11)
     val batch = pts(300, 12, from = 900)
     val dir = freshDir("uniform")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 900L)
+    IndexStore.save(GridReference.build(df(base)), dir, 900L)
     val stats = IndexStore.mergeInto(spark, dir, df(batch))
     assert(stats.ingested == 300L)
     assert(IndexStore.readMeta(spark, dir).numPoints == 1200L)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
   }
 
   test("local batch rewrites only its touched buckets; untouched files are untouched") {
     val base = pts(1000, 21)
     val batch = localPts(120, 22, from = 1000)
     val dir = freshDir("local")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1000L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1000L)
     val before = fileState(dir)
     val stats = IndexStore.mergeInto(spark, dir, df(batch))
 
@@ -117,7 +117,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
     // and the result is still bit-equal to a fresh rebuild of the union
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
   }
 
   test("chained merges through the store == one rebuild on everything") {
@@ -125,11 +125,11 @@ class IndexStoreSpec extends AnyFunSuite {
     val b1 = localPts(100, 32, from = 700)
     val b2 = pts(150, 33, from = 800)
     val dir = freshDir("chained")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 700L)
+    IndexStore.save(GridReference.build(df(base)), dir, 700L)
     IndexStore.mergeInto(spark, dir, df(b1))
     IndexStore.mergeInto(spark, dir, df(b2))
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ b1 ++ b2))))
+      canon(GridReference.build(df(base ++ b1 ++ b2))))
   }
 
   test("20-merge soak: chain == one rebuild, flat per-merge time, bounded files") {
@@ -147,7 +147,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val batchSz = 60
     val base = pts(800, 71)
     val dir = freshDir("soak")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 800L)
+    IndexStore.save(GridReference.build(df(base)), dir, 800L)
     val batches = (0 until nMerges).map { i =>
       localPts(batchSz, 72 + i, from = 800 + i * batchSz)
     }
@@ -161,7 +161,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(meta.numPoints == 800L + nMerges * batchSz)
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batches.flatten))))
+      canon(GridReference.build(df(base ++ batches.flatten))))
     // flat wall time: the last 5 merges must not run materially slower
     // than the first 5 (3.5x slack absorbs local-mode timing noise; a
     // real accumulation-leak regression is superlinear and blows well
@@ -186,7 +186,7 @@ class IndexStoreSpec extends AnyFunSuite {
       s"post-vacuum file population unbounded: $nFiles files for $nBuckets buckets")
     // vacuum must not have touched live data
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batches.flatten))))
+      canon(GridReference.build(df(base ++ batches.flatten))))
     IndexStore.validate(spark, dir)
   }
 
@@ -194,7 +194,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = pts(1000, 95)
     val batch = localPts(80, 96, from = 1000)
     val dir = freshDir("mvcc")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1000L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1000L)
     val reader = IndexStore.open(spark, dir)
     val cases = Seq(
       ((10.0, 40.0, 14.0, 44.0), 12),   // deep zoom: cold pinned-file scan
@@ -215,7 +215,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val fresh = IndexStore.open(spark, dir)
     assert(fresh.isCurrent)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
     // vacuum(keep=1) reclaims exactly the files only epoch 0 referenced:
     // something is deleted, the live epoch is untouched, and the fresh
     // Reader (pinned to the retained epoch) still answers every probe
@@ -227,7 +227,7 @@ class IndexStoreSpec extends AnyFunSuite {
         s"post-vacuum reader diverged at bbox=$b z=$z")
     }
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
     IndexStore.validate(spark, dir)
   }
 
@@ -235,18 +235,18 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = pts(700, 97)
     val batch = pts(120, 98, from = 700)
     val dir = freshDir("legacy")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 700L)
+    IndexStore.save(GridReference.build(df(base)), dir, 700L)
     // simulate an r11-era store: no manifests directory at all
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/manifests"), true)
     // reads fall back to the directory listing
-    assert(canon(IndexStore.load(spark, dir)) == canon(GridHierarchy.build(df(base))))
+    assert(canon(IndexStore.load(spark, dir)) == canon(GridReference.build(df(base))))
     // the first merge synthesizes the old epoch's file list and commits a
     // real manifest — results stay exactly rebuild-equal
     IndexStore.mergeInto(spark, dir, df(batch))
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
     val meta = IndexStore.readMeta(spark, dir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/manifests/epoch-${meta.epoch}.txt")),
@@ -258,10 +258,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = pts(600, 41)
     val batch = pts(200, 42, from = 600)
     val dir = freshDir("minpoints")
-    IndexStore.save(GridHierarchy.build(df(base), opts), dir, 600L, opts)
+    IndexStore.save(GridReference.build(df(base), opts), dir, 600L, opts)
     IndexStore.mergeInto(spark, dir, df(batch))
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch), opts)))
+      canon(GridReference.build(df(base ++ batch), opts)))
   }
 
   test("loadAsIndex serves the full query surface, equal to a fresh distributed index") {
@@ -269,7 +269,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = pts(800, 61)
     val batch = localPts(150, 62, from = 800)
     val dir = freshDir("asindex")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 800L)
+    IndexStore.save(GridReference.build(df(base)), dir, 800L)
     IndexStore.mergeInto(spark, dir, df(batch))
     val fromStore = IndexStore.loadAsIndex(spark, dir)
     val fresh = ClusterEngine.loadDistributed(df(base ++ batch))
@@ -293,7 +293,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("getClusters off the store == the loaded index's, reading only overlapping buckets") {
     val base = pts(1200, 81)
     val dir = freshDir("bboxq")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1200L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1200L)
     val idx = IndexStore.loadAsIndex(spark, dir)
     try {
       val cases = Seq(
@@ -337,7 +337,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("held-open Reader == one-shot getClusters; staleness detected after a merge") {
     val base = pts(1000, 91)
     val dir = freshDir("reader")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1000L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1000L)
     val reader = IndexStore.open(spark, dir)
     assert(reader.isCurrent)
     val cases = Seq(
@@ -367,7 +367,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("Reader coarse cache: cached, uncached (row-cap fallback), and closed probes all agree") {
     val base = pts(1000, 93)
     val dir = freshDir("readercache")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1000L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1000L)
     val world = (-180.0, -85.0, 180.0, 85.0)
     val city = (10.0, 40.0, 14.0, 44.0)
     // coarse zooms (≤ bucketZoom+2 = 4) serve off the cache; the capped
@@ -400,7 +400,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val all = pts(900, 71)
     val (basePts, streamPts) = all.splitAt(600)
     val dir = freshDir("streaming")
-    IndexStore.save(GridHierarchy.build(df(basePts)), dir, 600L)
+    IndexStore.save(GridReference.build(df(basePts)), dir, 600L)
 
     val input = MemoryStream[(Long, Double, Double)]
     val q = input.toDS().toDF("row_id", "lng", "lat").writeStream
@@ -416,21 +416,21 @@ class IndexStoreSpec extends AnyFunSuite {
     } finally q.stop()
 
     assert(IndexStore.readMeta(spark, dir).numPoints == 900L)
-    assert(canon(IndexStore.load(spark, dir)) == canon(GridHierarchy.build(df(all))))
+    assert(canon(IndexStore.load(spark, dir)) == canon(GridReference.build(df(all))))
   }
 
   test("salted save: multiple files per bucket, same rows back, merges unaffected") {
     val base = pts(800, 91)
     val batch = pts(100, 92, from = 800)
     val dir = freshDir("salted")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 800L, saltFiles = 3)
+    IndexStore.save(GridReference.build(df(base)), dir, 800L, saltFiles = 3)
     val perBucket = fileState(dir).keys.groupBy(_.takeWhile(_ != '/')).view.mapValues(_.size)
     assert(perBucket.values.max <= 3 && perBucket.values.exists(_ > 1),
       "salting should spread at least one bucket over multiple files")
-    assert(canon(IndexStore.load(spark, dir)) == canon(GridHierarchy.build(df(base))))
+    assert(canon(IndexStore.load(spark, dir)) == canon(GridReference.build(df(base))))
     IndexStore.mergeInto(spark, dir, df(batch))
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch))))
+      canon(GridReference.build(df(base ++ batch))))
   }
 
   test("writer fence: two interleaved merges from the same epoch — one commits, one throws, nothing is lost (r12 verdict #1)") {
@@ -443,7 +443,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // rebase cannot vouch and the conflict still surfaces loudly.
     val batchB = localPts(90, 203, from = 700)
     val dir = freshDir("fence")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 700L)
+    IndexStore.save(GridReference.build(df(base)), dir, 700L)
     // deterministic same-epoch interleave, no threads: the LOSER merge
     // (batch B) reaches its commit point having read meta at epoch 0;
     // the hook then runs the WINNER merge (batch A) to completion —
@@ -463,27 +463,27 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.readMeta(spark, dir).numPoints == 780L)
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchA))))
+      canon(GridReference.build(df(base ++ batchA))))
     // the loser's appended files are unreferenced orphans — vacuum
     // reclaims them without touching the live epoch
     val deleted = IndexStore.vacuum(spark, dir, keepEpochs = 1)
     assert(deleted > 0, "the aborted merge must leave orphan files to reclaim")
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchA))))
+      canon(GridReference.build(df(base ++ batchA))))
     // a clean RE-merge of the loser's batch (same coordinates, ids
     // re-issued to continue the WINNER's id space) lands on epoch 2
     val batchB2 = pts(90, 203, from = 780)
     IndexStore.mergeInto(spark, dir, df(batchB2))
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchA ++ batchB2))))
+      canon(GridReference.build(df(base ++ batchA ++ batchB2))))
   }
 
   test("vacuum fence: a vacuum racing an in-flight merge wins the slot; the merge REBASES onto the identity fence (r16) and never commits deleted files") {
     val base = pts(800, 211)
     val batch = localPts(70, 212, from = 800)
     val dir = freshDir("vacfence")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 800L)
+    IndexStore.save(GridReference.build(df(base)), dir, 800L)
     // merge 1 creates reclaimable epoch-0 versions so the racing vacuum
     // has real work to do (and upgrades the store to v2 manifests)
     IndexStore.mergeInto(spark, dir, df(batch))
@@ -508,13 +508,13 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.validate(spark, dir)
     assert(IndexStore.readMeta(spark, dir).numPoints == 930L)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batch ++ pts(60, 213, from = 870)))))
+      canon(GridReference.build(df(base ++ batch ++ pts(60, 213, from = 870)))))
   }
 
   test("disjoint-merge rebase (r15 verdict #5): the CAS loser re-lands on the winner O(touched), value == sequential merges") {
     val base = pts(700, 231)
     val dir = freshDir("rebase")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 700L)
+    IndexStore.save(GridReference.build(df(base)), dir, 700L)
     // upgrade to v2 manifests (the rebase diffs bucket entries)
     val batchC = localPts(10, 234, from = 700)
     IndexStore.mergeInto(spark, dir, df(batchC))
@@ -541,7 +541,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // leaf ids re-issued after A — exactly what the rebase's id shift does
     val batchBSeq = batchB.map { case (id, x, y) => (id + 80L, x, y) }
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchC ++ batchA ++ batchBSeq))))
+      canon(GridReference.build(df(base ++ batchC ++ batchA ++ batchBSeq))))
     // and an OVERLAPPING loser still throws (the writer-fence test pins it)
   }
 
@@ -549,7 +549,7 @@ class IndexStoreSpec extends AnyFunSuite {
     import graft.cluster.StoreCommitConflict
     val base = pts(500, 221)
     val dir = freshDir("crashed")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 500L)
+    IndexStore.save(GridReference.build(df(base)), dir, 500L)
     // simulate a merge that died mid-commit: a (torn) manifest ahead of
     // the committed meta
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -564,19 +564,19 @@ class IndexStoreSpec extends AnyFunSuite {
     intercept[StoreCommitConflict] { IndexStore.vacuum(spark, dir) }
     // reads are unaffected (the orphan is ahead of meta — nobody plans
     // from it)
-    assert(canon(IndexStore.load(spark, dir)) == canon(GridHierarchy.build(df(base))))
+    assert(canon(IndexStore.load(spark, dir)) == canon(GridReference.build(df(base))))
     // recover() deletes orphans ahead of meta; writers proceed
     assert(IndexStore.recover(spark, dir) == 1L)
     IndexStore.mergeInto(spark, dir, df(pts(50, 222, from = 500)))
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ pts(50, 222, from = 500)))))
+      canon(GridReference.build(df(base ++ pts(50, 222, from = 500)))))
   }
 
   test("manifest-era store with a deleted epoch manifest throws instead of directory-scanning duplicates") {
     val base = pts(600, 231)
     val dir = freshDir("strict")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 600L)
+    IndexStore.save(GridReference.build(df(base)), dir, 600L)
     IndexStore.mergeInto(spark, dir, df(pts(80, 232, from = 600)))
     // kill the CURRENT epoch's manifest (epoch 1), leaving epoch 0's: the
     // old fallback silently scanned the levels dir — superseded epoch-0
@@ -610,7 +610,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val batchA = pts(80, 242, from = 700)   // the loser (paused mid-commit)
     val batchB = localPts(90, 243, from = 700) // the rival that lands last... first
     val dir = freshDir("nonatomic")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 700L)
+    IndexStore.save(GridReference.build(df(base)), dir, 700L)
     IndexStore.testFsTransform = fs => new NonAtomicCreateFs(fs)
     // merge A writes its epoch-1 manifest (create "succeeds" — non-atomic),
     // then pauses before the verify; rival merge B runs to completion in
@@ -635,13 +635,13 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.readMeta(spark, dir).numPoints == 790L)
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchB))))
+      canon(GridReference.build(df(base ++ batchB))))
     // and the loser's clean retry (ids continuing the rival's space) lands
     val batchA2 = pts(80, 242, from = 790)
     IndexStore.mergeInto(spark, dir, df(batchA2))
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ batchB ++ batchA2))))
+      canon(GridReference.build(df(base ++ batchB ++ batchA2))))
   }
 
   test("consecutive vacuums: fence epochs don't squeeze real commits out of retention; a reader lagging one real epoch survives (r13 advice)") {
@@ -649,7 +649,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val b1 = pts(90, 252, from = 800)
     val b2 = localPts(70, 253, from = 890)
     val dir = freshDir("vacfencecount")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 800L)       // epoch 0
+    IndexStore.save(GridReference.build(df(base)), dir, 800L)       // epoch 0
     IndexStore.mergeInto(spark, dir, df(b1))                         // epoch 1
     val lagging = IndexStore.open(spark, dir)                        // pins epoch 1
     IndexStore.mergeInto(spark, dir, df(b2))                         // epoch 2
@@ -672,7 +672,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // the store itself is intact and writable
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ b1 ++ b2))))
+      canon(GridReference.build(df(base ++ b1 ++ b2))))
     IndexStore.mergeInto(spark, dir, df(pts(40, 254, from = 960)))
     IndexStore.validate(spark, dir)
   }
@@ -682,7 +682,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val b1 = localPts(60, 262, from = 1200)
     val b2 = localPts(60, 263, from = 1260)
     val dir = freshDir("bucketman")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 1200L)
+    IndexStore.save(GridReference.build(df(base)), dir, 1200L)
     // merge 1 pays the one-time upgrade from the flat epoch-0 manifest
     // (every untouched bucket's manifest written once)
     val s1 = IndexStore.mergeInto(spark, dir, df(b1))
@@ -713,7 +713,7 @@ class IndexStoreSpec extends AnyFunSuite {
         "merge planning")
     // the resolved read is bit-equal to a fresh rebuild of the union
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ b1 ++ b2))))
+      canon(GridReference.build(df(base ++ b1 ++ b2))))
     // vacuum: fence reuses the bucket pointers, aged-out bucket manifests
     // are GC'd, and the store still resolves identically
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -727,7 +727,7 @@ class IndexStoreSpec extends AnyFunSuite {
       "vacuum should GC the bucket manifests only aged-out epochs referenced")
     IndexStore.validate(spark, dir)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(base ++ b1 ++ b2))))
+      canon(GridReference.build(df(base ++ b1 ++ b2))))
     // a missing referenced bucket manifest is loud corruption, not a
     // silent partial read
     fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/manifests"))
@@ -742,7 +742,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("empty batch is an identity merge") {
     val base = pts(400, 51)
     val dir = freshDir("empty")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 400L)
+    IndexStore.save(GridReference.build(df(base)), dir, 400L)
     val beforeRows = canon(IndexStore.load(spark, dir))
     IndexStore.mergeInto(spark, dir, df(Nil))
     assert(IndexStore.readMeta(spark, dir).numPoints == 400L)
@@ -754,13 +754,13 @@ class IndexStoreSpec extends AnyFunSuite {
   test("removeFrom(uniform subset) == rebuild of the survivors in the SAME id space; numPoints untouched (r15 verdict #3)") {
     val base = pts(900, 61)
     val dir = freshDir("rm_uniform")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 900L)
+    IndexStore.save(GridReference.build(df(base)), dir, 900L)
     val removed = base.filter(_._1 % 7 == 3)
     val stats = IndexStore.removeFrom(spark, dir, df(removed))
     assert(stats.ingested == removed.length.toLong)
     val survivors = base.filterNot(_._1 % 7 == 3)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(survivors), idSpace = 900L)),
+      canon(GridReference.build(df(survivors), idSpace = 900L)),
       "remove must equal a fresh build of the survivors in the original id space")
     // the id space is append-only: removal never renumbers survivors
     assert(IndexStore.readMeta(spark, dir).numPoints == 900L)
@@ -770,7 +770,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("removeFrom(local batch) rewrites only its touched buckets; a merge on top continues the id space past removed ids") {
     val base = pts(800, 62) ++ localPts(150, 63, from = 800)
     val dir = freshDir("rm_local")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 950L)
+    IndexStore.save(GridReference.build(df(base)), dir, 950L)
     val state0 = fileState(dir)
     val removed = base.filter(p => p._1 >= 800 && p._1 % 3 == 1)
     val stats = IndexStore.removeFrom(spark, dir, df(removed))
@@ -784,14 +784,14 @@ class IndexStoreSpec extends AnyFunSuite {
     overlap.foreach { f => assert(state0(f) == state1(f), s"$f changed") }
     val survivors = base.filterNot(p => p._1 >= 800 && p._1 % 3 == 1)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(survivors), idSpace = 950L)))
+      canon(GridReference.build(df(survivors), idSpace = 950L)))
     // ingest AFTER removal: new ids continue at numPoints (removed ids
     // are never reused), and the chain still equals one rebuild
     val batch = pts(80, 64, from = 950)
     IndexStore.mergeInto(spark, dir, df(batch))
     assert(IndexStore.readMeta(spark, dir).numPoints == 1030L)
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(survivors ++ batch), idSpace = 1030L)))
+      canon(GridReference.build(df(survivors ++ batch), idSpace = 1030L)))
   }
 
   test("removeFrom gate transition: a cluster dissolving below minPoints recurses correctly (== rebuild)") {
@@ -804,22 +804,22 @@ class IndexStoreSpec extends AnyFunSuite {
     val spread = pts(200, 65, from = 6)
     val all = dense ++ spread
     val dir = freshDir("rm_gate")
-    IndexStore.save(GridHierarchy.build(df(all), opts), dir, 206L, opts)
+    IndexStore.save(GridReference.build(df(all), opts), dir, 206L, opts)
     IndexStore.removeFrom(spark, dir, df(dense.take(2)))
     val survivors = dense.drop(2) ++ spread
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(survivors), opts, idSpace = 206L)))
+      canon(GridReference.build(df(survivors), opts, idSpace = 206L)))
     // and the other direction: removal that keeps the gate shut tight
     // (mass stays >= minPoints) — the cluster shrinks, not dissolves
     IndexStore.removeFrom(spark, dir, df(Seq.empty[(Long, Double, Double)]))
     assert(canon(IndexStore.load(spark, dir)) ==
-      canon(GridHierarchy.build(df(survivors), opts, idSpace = 206L)))
+      canon(GridReference.build(df(survivors), opts, idSpace = 206L)))
   }
 
   test("removeFrom integrity gate: unknown ids and wrong coordinates fail loudly, store unchanged") {
     val base = pts(300, 66)
     val dir = freshDir("rm_guard")
-    IndexStore.save(GridHierarchy.build(df(base)), dir, 300L)
+    IndexStore.save(GridReference.build(df(base)), dir, 300L)
     val before = canon(IndexStore.load(spark, dir))
     val eId = intercept[IllegalArgumentException] {
       IndexStore.removeFrom(spark, dir, df(Seq((999L, 10.0, 10.0))))

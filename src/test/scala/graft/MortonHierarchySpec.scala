@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.{ClusterOptions, GridHierarchy, MortonHierarchy}
+import graft.cluster.{ClusterOptions, GridReference, MortonHierarchy}
 
 /** The single-shuffle Morton build must reproduce the per-level fold
   * EXACTLY — same ids, parents, counts, stamps, and (fround-quantized)
   * positions — on every fixture and at every partitioning. The per-level
-  * [[GridHierarchy]] is kept as the executable spec of the semantics.
+  * [[graft.cluster.GridReference]] is kept as the executable spec of the semantics.
   */
 class MortonHierarchySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -30,7 +30,7 @@ class MortonHierarchySpec extends AnyFunSuite {
   }
 
   test("morton build ≡ per-level fold on the sf0.001 fixture") {
-    val a = canon(GridHierarchy.build(pts(0), idCol = "event_id"))
+    val a = canon(GridReference.build(pts(0), idCol = "event_id"))
     val b = canon(MortonHierarchy.build(pts(0), idCol = "event_id"))
     assert(a.length == b.length, s"row counts: ${a.length} vs ${b.length}")
     a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
@@ -84,12 +84,12 @@ class MortonHierarchySpec extends AnyFunSuite {
     val same = (0L until 50L).map(i => (i, 10.0, 10.0)) ++
       Seq((50L, -120.0, 33.0), (51L, 139.7, 35.6), (52L, 2.35, 48.85))
     val df = same.toDF("row_id", "lng", "lat")
-    val a = canon(GridHierarchy.build(df.repartition(4)))
+    val a = canon(GridReference.build(df.repartition(4)))
     val b = canon(MortonHierarchy.build(df.repartition(4)))
     assert(a.toSeq == b.toSeq)
 
     val one = Seq((0L, 1.0, 2.0)).toDF("row_id", "lng", "lat")
-    assert(canon(GridHierarchy.build(one)).toSeq ==
+    assert(canon(GridReference.build(one)).toSeq ==
       canon(MortonHierarchy.build(one)).toSeq)
 
     val none = Seq.empty[(Long, Double, Double)].toDF("row_id", "lng", "lat")
@@ -144,7 +144,7 @@ class MortonHierarchySpec extends AnyFunSuite {
 
   test("minPoints > 2: builds agree, are partition-invariant, and gate fusion by mass") {
     val opts = ClusterOptions(minPoints = 5)
-    val a = canon(GridHierarchy.build(pts(0), opts, idCol = "event_id"))
+    val a = canon(GridReference.build(pts(0), opts, idCol = "event_id"))
     val b = canon(MortonHierarchy.build(pts(0), opts, idCol = "event_id"))
     assert(a.length == b.length, s"row counts: ${a.length} vs ${b.length}")
     a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
@@ -190,7 +190,7 @@ class MortonHierarchySpec extends AnyFunSuite {
         (58L, -170.0, 70.0), (59L, 170.0, -70.0)))
       .toDF("row_id", "lng", "lat")
     val opts = ClusterOptions(minPoints = 6)
-    val ref = canon(GridHierarchy.build(df.repartition(1), opts))
+    val ref = canon(GridReference.build(df.repartition(1), opts))
     Seq(2, 4, 8).foreach { parts =>
       val got = canon(MortonHierarchy.build(df.repartition(parts), opts))
       assert(ref.toSeq == got.toSeq, s"parts=$parts diverged")
@@ -204,7 +204,7 @@ class MortonHierarchySpec extends AnyFunSuite {
       (i, rnd.nextDouble() * 360.0 - 180.0, rnd.nextDouble() * 160.0 - 80.0)
     }.toDF("row_id", "lng", "lat")
     val opts = ClusterOptions(minZoom = 2, maxZoom = 9)
-    val a = canon(GridHierarchy.build(df.repartition(5), opts))
+    val a = canon(GridReference.build(df.repartition(5), opts))
     val b = canon(MortonHierarchy.build(df.repartition(5), opts))
     assert(a.toSeq == b.toSeq)
   }

@@ -3,6 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The one session every spec shares (one forked test JVM). Two settings
+  * only change speed, never results: the generated-code cache holds the
+  * whole suite's distinct stages (the default 100 entries thrash, so the
+  * same stage recompiles test after test), and explicit file lists are
+  * stat-ed on the driver instead of by a one-task-per-file listing job
+  * (an IndexStore read names every bucket file of its epoch).
+  */
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -11,6 +18,8 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "4000")
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     .getOrCreate()
 }
 
