@@ -125,12 +125,13 @@ object Bench {
     // breaks the driver-bounded invariant of the single-partition final
     // sort (PlanBridge scaladoc), so it fails loudly in the artifact.
     val desampleOverflow = scala.collection.mutable.LinkedHashSet.empty[String]
+    val desampled = SparkEntry.desampled
     def measureQuery(name: String, fn: (SparkSession, String) => DataFrame): (Outcome, Double) = {
       val runs = (1 to reps).map { _ =>
         val (ok, sec) = timed {
           try {
             val rows = fn(spark, sfDir).queryExecution.toRdd.count()
-            GraftQuery.desampleOverflow(name, rows).foreach { msg =>
+            GraftQuery.desampleOverflow(name, rows, desampled(name)).foreach { msg =>
               if (desampleOverflow.add(name)) System.err.println(s"[bench] DESAMPLE OVERFLOW $msg")
             }
             true

@@ -9,27 +9,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle equivalent DuckDB SQL over the same parquet tables, when the
   *               operation is SQL-expressible (None → driver does a weaker
   *               rows-only check)
+  * @param desampled whether `run` carries the single-partition final-sort
+  *               rewrite, and so the driver-bounded-result invariant that
+  *               [[GraftQuery.desampleOverflow]] checks
   */
 final case class GraftQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    desampled: Boolean)
 
 object GraftQuery {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, desampled(run), Some(oracle))
+    GraftQuery(name, desampled(run), Some(oracle), !desampleDisabled)
   def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, desampled(run), None)
+    GraftQuery(name, desampled(run), None, !desampleDisabled)
 
   /** Opt-out constructor for a query whose ordered RESULT is corpus-sized
     * (none today — largest declared result is 15k rows): the final sort
     * stays a range sort so the output never funnels through one task. The
-    * single-partition rewrite's driver-bounded-result invariant is enforced
-    * at runtime by [[desampleOverflow]] (checked by Bench and Verify).
+    * single-partition rewrite's driver-bounded-result invariant, which
+    * [[desampleOverflow]] enforces at runtime for every other query
+    * (checked by Bench and Verify), does not apply to it.
     */
   def sqlLargeResult(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, run, Some(oracle))
+    GraftQuery(name, run, Some(oracle), desampled = false)
 
   /** `GRAFT_NO_DESAMPLE=1` disables the final-sort rewrite (any other value,
     * including `0`, leaves it ON — value-checked, not presence-checked). */
@@ -54,9 +59,11 @@ object GraftQuery {
     }
 
   /** Non-empty message when a desampled query's executed row count breaks
-    * the driver-bounded-result invariant the rewrite relies on. */
-  private[graft] def desampleOverflow(name: String, rows: Long): Option[String] =
-    if (!desampleDisabled && rows > DesampleMaxRows)
+    * the driver-bounded-result invariant the rewrite relies on; `desampled`
+    * is the query's [[GraftQuery.desampled]] flag. */
+  private[graft] def desampleOverflow(
+      name: String, rows: Long, desampled: Boolean): Option[String] =
+    if (desampled && rows > DesampleMaxRows)
       Some(s"$name: $rows result rows exceed GRAFT_DESAMPLE_MAX_ROWS=" +
         s"$DesampleMaxRows — a result this large should keep its range " +
         "sort (declare it via GraftQuery.sqlLargeResult)")

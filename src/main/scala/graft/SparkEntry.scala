@@ -28,4 +28,10 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Names of the queries whose final sort is desampled ([[GraftQuery.desampled]]):
+    * every query but a [[GraftQuery.sqlLargeResult]] one, and none under
+    * `GRAFT_NO_DESAMPLE=1`. */
+  def desampled: Set[String] =
+    registry.filter(_.desampled).map(_.name).toSet
 }

@@ -28,6 +28,7 @@ object Verify {
     // results plus a summary errors.json so the driver's compare (and any
     // human diffing the outDir) sees a failure, never a silent shrink.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val desampled = SparkEntry.desampled
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
@@ -55,7 +56,7 @@ object Verify {
       // diagnostic: a failed read is reported, never a failed query.
       if (wrote)
         try GraftQuery
-          .desampleOverflow(name, spark.read.parquet(s"$outDir/$name").count())
+          .desampleOverflow(name, spark.read.parquet(s"$outDir/$name").count(), desampled(name))
           .foreach(msg => System.err.println(s"[verify] DESAMPLE OVERFLOW $msg"))
         catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name: desample check skipped: $e")

@@ -172,6 +172,11 @@ object IndexStore {
       else col(c)
     }: _*)
 
+  /** Partition count of an unsalted bucket write: one per core, explicit
+    * so that AQE does not coalesce the write into a single task. */
+  private def writeParallelism(spark: SparkSession): Int =
+    math.max(1, spark.sparkContext.defaultParallelism)
+
   private def requireBucketZoom(opts: ClusterOptions, bucketZoom: Int): Unit = {
     require(bucketZoom >= opts.minZoom && bucketZoom <= opts.maxZoom,
       s"bucketZoom=$bucketZoom must lie in [${opts.minZoom}, ${opts.maxZoom}]")
@@ -206,16 +211,19 @@ object IndexStore {
     val spark = index.sparkSession
     val data = encodeIds(index.select(DataCols.map(col): _*), totalPoints)
       .withColumn("bucket", bucketCol(opts, bucketZoom))
-    // Salting needs an EXPLICIT partition count: a keys-only repartition
-    // is an AQE-coalescible exchange, and AQE happily folds a small salted
-    // write into one task — every bucket then lands in a single file and
-    // saltFiles silently does nothing (the r9 defect: the hot-bucket
-    // escape hatch no-oped exactly when a 100x scale-up would need it).
-    // A user-specified numPartitions is exempt from AQE coalescing, so
-    // size it to the salt-group count (occupied buckets × saltFiles — one
-    // extra distinct-count job, paid only on salted saves).
+    // Both branches need an EXPLICIT partition count: a keys-only
+    // repartition is an AQE-coalescible exchange, and AQE folds a small
+    // write into one task. Unsalted, that task writes every bucket's file
+    // while the other cores idle; salted, every bucket lands in a single
+    // file and saltFiles silently does nothing (the r9 defect: the
+    // hot-bucket escape hatch no-oped exactly when a 100x scale-up would
+    // need it). A user-specified numPartitions is exempt from AQE
+    // coalescing. Unsalted, one partition per core: hashing on the bucket
+    // alone still sends each bucket to exactly one task, so one file per
+    // bucket. Salted, size it to the salt-group count (occupied buckets ×
+    // saltFiles — one extra distinct-count job, paid only on salted saves).
     val parted =
-      if (saltFiles == 1) data.repartition(col("bucket"))
+      if (saltFiles == 1) data.repartition(writeParallelism(spark), col("bucket"))
       else {
         val nBuckets = data.select(col("bucket")).distinct().count()
         val nParts = math.max(1L, math.min(nBuckets * saltFiles, 1L << 18)).toInt
@@ -1351,7 +1359,7 @@ object IndexStore {
         "— the consuming-pass nesting invariant is broken; aborting before " +
         "the manifest would silently drop them")
     withBucket
-      .repartition(col("bucket"))
+      .repartition(writeParallelism(spark), col("bucket")) // see save
       .write.mode("append")
       .partitionBy("bucket").parquet(s"$path/levels")
     val after = listBucketFiles(fs, path, wantedDirs)

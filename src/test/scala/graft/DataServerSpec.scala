@@ -96,4 +96,28 @@ class DataServerSpec extends AnyFunSuite {
       assert(get("zoom=4")._1 == 400)
     } finally { srv.stop(); idx.unpersist() }
   }
+
+  test("/clusters tiles on a keep-alive connection answer without the delayed-ACK stall") {
+    import spark.implicits._
+    import graft.cluster.{ClusterEngine, ClusterOptions}
+    val pts = PointFixtures.uniform(500).toSeq.toDF("row_id", "lng", "lat")
+    val idx = ClusterEngine.load(pts, ClusterOptions(radius = 75.0), idCol = Some("row_id"))
+    val srv = DataServer.start(Map.empty, clusterIndex = Some(idx))
+    try {
+      val url = new java.net.URL(s"http://127.0.0.1:${srv.port}/clusters?bbox=-120,-40,100,70&zoom=4")
+      // sequential GETs on one kept-alive connection (each body read to the
+      // end so that the client reuses it); with Nagle on, every body waited
+      // for the client's delayed ACK, ~40 ms on Linux
+      val ms = (1 to 31).map { _ =>
+        val t0 = System.nanoTime()
+        val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+        assert(conn.getResponseCode == 200)
+        val is = conn.getInputStream
+        try assert(is.readAllBytes().nonEmpty) finally is.close()
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 20.0, s"median tile ${ms(ms.size / 2)} ms; all: ${ms.mkString(", ")}")
+      assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    } finally { srv.stop(); idx.unpersist() }
+  }
 }
