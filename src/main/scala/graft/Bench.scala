@@ -244,7 +244,7 @@ object Bench {
           "profile" -> JArray(calibrationProfile.toList.map { case (after, sec) =>
             JObject("after_query" -> JInt(after), "sec" -> JDouble(sec))
           }))) ++
-        rerunFields(queryRerun, sectionRerun) ++
+        rerunFields(queryRerun, sectionRerun, coldQueries = reps == 1) ++
         top("sf" -> JString(sfDir)))
 
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")

@@ -176,19 +176,23 @@ object BenchSections {
   /** The `rerun`/`section_rerun` maps and the suite-level verdict: one
     * ratio Σ rerun / Σ first over both. A clean run sits near 1.0; a
     * first pass hit by ambient load reads well under it, and the artifact
-    * labels itself `suite_contaminated`.
+    * labels itself `suite_contaminated`. With `coldQueries` (one rep per
+    * query) a query's first-pass value is its COLD run while its rerun is
+    * warm, so the query pairs are listed but left out of the ratio: the
+    * verdict compares warm against warm only.
     */
-  def rerunFields(queries: Seq[Rerun], sections: Seq[Rerun]): Seq[(List[String], JValue)] = {
+  def rerunFields(queries: Seq[Rerun], sections: Seq[Rerun],
+      coldQueries: Boolean = false): Seq[(List[String], JValue)] = {
     def entries(name: String, rs: Seq[Rerun], withOk: Boolean) = rs.map { r =>
       List(name, r.key) -> JObject(List("first" -> JDouble(r.first),
         "rerun" -> JDouble(r.again)) ++ (if (withOk) List("ok" -> JBool(r.ok)) else Nil))
     }
-    val all = queries ++ sections
+    val judged = (if (coldQueries) Nil else queries) ++ sections
     val verdict =
-      if (all.isEmpty) Nil
+      if (judged.isEmpty) Nil
       else {
-        val firstSum = all.map(_.first).sum
-        val ratio = if (firstSum > 0.0) all.map(_.again).sum / firstSum else 1.0
+        val firstSum = judged.map(_.first).sum
+        val ratio = if (firstSum > 0.0) judged.map(_.again).sum / firstSum else 1.0
         List(List("rerun_total_ratio") -> JDouble(ratio),
           List("suite_contaminated") -> JBool(ratio < 0.5))
       }

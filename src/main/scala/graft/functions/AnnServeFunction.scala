@@ -23,8 +23,8 @@ import graft.operators.AnnServeRegistry
   * missing/non-covering calibration, a missing vecstore sidecar, or an
   * over-cap corpus throws with the remedy named — SQL callers get no
   * silently-degraded answers. Freshness: the snapshot re-checks the
-  * index save fingerprint at most every few seconds (per-row FS listings
-  * would dominate ms-scale searches); a re-saved index is picked up
+  * index save fingerprint (one stat of the index's commit marker) at
+  * most every few seconds, not per row; a re-saved index is picked up
   * within that window.
   *
   * Evaluation needs a SparkSession in the evaluating JVM to OPEN the

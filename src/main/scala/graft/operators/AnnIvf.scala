@@ -540,13 +540,19 @@ object AnnIvf {
 /** Parquet persistence for [[AnnCalibration]] + the index-save epoch it
   * binds to. Both sides are single-row coalesced parquet — broadcast-
   * sized metadata next to the index files, the same deployment story.
+  * Each write ends with the serve commit ([[AnnIvfPq.commitServe]]).
   */
 private[operators] object AnnCalStore {
+  private def commit(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    AnnIvfPq.commitServe(org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create(path), spark.sparkContext.hadoopConfiguration), path)
+
   def writeEpoch(spark: org.apache.spark.sql.SparkSession, path: String): String = {
     import spark.implicits._
     val epoch = java.util.UUID.randomUUID().toString
     Seq(epoch).toDF("epoch")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/epoch")
+    commit(spark, path)
     epoch
   }
 
@@ -566,6 +572,7 @@ private[operators] object AnnCalStore {
     val stamped = cal.copy(epoch = epoch)
     Seq(stamped).toDF()
       .coalesce(1).write.mode("overwrite").parquet(s"$path/calibration")
+    commit(spark, path)
     stamped
   }
 

@@ -164,18 +164,15 @@ object AnnIvfPq {
     // path reused across variants can't serve a stale marker.
     Seq(residual).toDF("residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/variant")
-    // fresh epoch per save — binds any later saveCalibration to THIS
-    // index (see AnnIvf.saveIndex)
-    AnnCalStore.writeEpoch(coded.sparkSession, path)
-    // a fresh save is a NEW index: tombstones and append markers from a
-    // previous save at this path would silently delete (or re-fingerprint)
-    // rows of the new one
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(path),
+    // a fresh save is a NEW index: tombstones from a previous save at
+    // this path would silently delete rows of the new one
+    org.apache.hadoop.fs.FileSystem.get(java.net.URI.create(path),
       coded.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/appends"), true)
-    ()
+      .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    // fresh epoch per save — binds any later saveCalibration to THIS
+    // index (see AnnIvf.saveIndex); written last, its serve commit
+    // publishes the whole save
+    AnnCalStore.writeEpoch(coded.sparkSession, path): Unit
   }
 
   /** Whether the index saved at `path` carries residual codes — the
@@ -294,14 +291,15 @@ object AnnIvfPq {
     val conf = spark.sparkContext.hadoopConfiguration
     if (AnnServePack.exists(conf, path))
       AnnServePack.appendTombstones(conf, path, dedup.toArray): Unit
+    commitServe(fs, path)
     dedup.length.toLong
   }
 
-  /** Per-(path, save-epoch) serving state: the variant marker, the stored
+  /** Per-(path, save) serving state: the variant marker, the stored
     * calibration, and (lazily, double-checked) the driver-local snapshot.
     * All three are properties of one index SAVE, so a serving process
-    * pays their reads once — the steady-state serve() call runs exactly
-    * two tiny jobs (the epoch freshness read + the query-batch collect)
+    * pays their reads once — the steady-state serve() call stats the
+    * commit marker and runs one tiny job (the query-batch collect)
     * before pure in-process arithmetic.
     *
     * The snapshot memo records WHAT IT WAS OPENED UNDER (r13 advice):
@@ -366,67 +364,79 @@ object AnnIvfPq {
     * fingerprint) — open once per process, serve many (the same
     * session-cache shape as the clustering serve snapshots,
     * operators/Spatial.scala). A re-saved index gets a fresh fingerprint,
-    * so a stale snapshot can never answer for the new files; inserting a
-    * new fingerprint for a path evicts the old one (at most one live
-    * snapshot per path).
+    * so a stale snapshot can never answer for the new files; a serve
+    * commit, or a new fingerprint committed by another process, evicts
+    * the path's older entries (at most one live snapshot per path).
     */
   private val serveStates =
     new java.util.concurrent.ConcurrentHashMap[(String, String), ServeState]()
 
-  /** Save-freshness fingerprint: names + mtimes of the files under the
-    * index's per-save metadata dirs — `epoch` (every [[saveIndex]]
-    * writes a fresh UUID-named part file there), `calibration` (a
-    * re-stamp must refresh the memoized state, or a post-re-save
-    * [[saveCalibration]] would be invisible), `variant`, and the
-    * vecstore's commit marker (writing the rerank sidecar after a
-    * serve() refusal must refresh the memo, or the codes tier would
-    * stay invisible until re-save). Pure driver FS listings — NO Spark
-    * job — so the warm serve path's freshness check costs microseconds
-    * locally (four LISTs on an object store), not a per-call
-    * parquet-read job.
-    */
-  private def epochFingerprint(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    fingerprintConf(spark.sparkContext.hadoopConfiguration, path)
+  private val ServeCommit = "_serve_commit"
 
-  private def fingerprintConf(
-      conf: org.apache.hadoop.conf.Configuration, path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create(path), conf)
-    Seq("epoch", "calibration", "variant", "vecstore/meta.txt",
-      "servepack/meta.txt", "appends", "tombstones").map { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$d")
-      if (!fs.exists(p)) ""
-      else fs.listStatus(p).map(s => s"${s.getPath.getName}:${s.getModificationTime}")
-        .sorted.mkString(",")
-    }.mkString(";")
+  /** Commit a serve-visible write at `path`: every writer of an artifact
+    * a serve tier reads (epoch, calibration, variant, tombstones, coded
+    * appends, the vecstore and servepack metas) ends here. The marker
+    * `<path>/_serve_commit` is written through tmp + rename with an mtime
+    * strictly past the previous commit's, so two commits never share a
+    * [[serveFingerprint]] even within one clock tick, and a reader never
+    * sees a half-written marker. This process's memoized serve state for
+    * the path is dropped, so a re-save is seen on the very next call.
+    */
+  private[graft] def commitServe(
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$path/$ServeCommit")
+    val tmp = new org.apache.hadoop.fs.Path(s"$path/$ServeCommit.tmp")
+    val prev =
+      try fs.getFileStatus(marker).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    val stamp = math.max(System.currentTimeMillis(), prev + 1L)
+    val o = fs.create(tmp, true)
+    try o.write(s"$stamp\n".getBytes("UTF-8"))
+    finally o.close()
+    fs.setTimes(tmp, stamp, -1L)
+    // rename replaces atomically on POSIX; stores whose rename refuses an
+    // existing destination take the delete-then-rename fallback
+    if (!fs.rename(tmp, marker)) {
+      fs.delete(marker, false)
+      require(fs.rename(tmp, marker), s"serve commit rename failed at $path")
+    }
+    serveStates.keySet.removeIf(_._1 == path): Unit
   }
 
-  /** The save fingerprint, for the SQL tier's freshness checks
-    * ([[AnnServeRegistry]]). The Configuration overload is the
-    * session-free path (executor JVMs, standalone serving).
+  /** Save-freshness fingerprint: one stat of the serve commit marker,
+    * `mtime:len` — NO Spark job and no directory listing, so the warm
+    * serve path's freshness check is a single metadata call (one HEAD
+    * on an object store). An index saved before the marker existed reads
+    * as "" and stays servable; its next write creates the marker. Takes a
+    * Configuration so the SQL tier ([[AnnServeRegistry]]) checks it from
+    * any JVM, session-free.
     */
-  private[operators] def serveFingerprint(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    epochFingerprint(spark, path)
-
-  private[operators] def serveFingerprint(
+  private[graft] def serveFingerprint(
       conf: org.apache.hadoop.conf.Configuration, path: String): String =
-    fingerprintConf(conf, path)
+    try {
+      val st = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create(path), conf)
+        .getFileStatus(new org.apache.hadoop.fs.Path(s"$path/$ServeCommit"))
+      s"${st.getModificationTime}:${st.getLen}"
+    } catch { case _: java.io.FileNotFoundException => "" }
 
   /** The memoized per-save serving state for `path` (marker +
     * calibration + lazy snapshot slot), freshness-checked by
-    * [[epochFingerprint]].
+    * [[serveFingerprint]].
     */
   private def serveState(
       spark: org.apache.spark.sql.SparkSession, path: String): ServeState = {
-    val key = (path, epochFingerprint(spark, path))
-    // evict state of older saves at this path BEFORE the compute — at
-    // most one live snapshot per path holds driver memory, and mutating
-    // other keys inside computeIfAbsent's mapping function would violate
-    // ConcurrentHashMap's contract (same-bin removal can deadlock)
-    serveStates.keySet.removeIf(k => k._1 == path && k != key)
-    serveStates.computeIfAbsent(key, _ =>
-      new ServeState(isResidual(spark, path), loadCalibration(spark, path)))
+    val key = (path, serveFingerprint(spark.sparkContext.hadoopConfiguration, path))
+    val hit = serveStates.get(key)
+    if (hit != null) hit
+    else {
+      // a save this process has not served yet: evict older saves' state
+      // BEFORE the compute — mutating other keys inside computeIfAbsent's
+      // mapping function would violate ConcurrentHashMap's contract
+      // (same-bin removal can deadlock)
+      serveStates.keySet.removeIf(k => k._1 == path && k != key)
+      serveStates.computeIfAbsent(key, _ =>
+        new ServeState(isResidual(spark, path), loadCalibration(spark, path)))
+    }
   }
 
   /** Test visibility: is a live local snapshot memoized for `path`? */
@@ -479,7 +489,7 @@ object AnnIvfPq {
     * the coded table (one job-atomic parquet append), one
     * [[AnnVecStore]] segment when a sidecar exists (O(batch), never a
     * sidecar rewrite), one [[AnnServePack]] delta when a pack exists —
-    * then touch the append marker so every serve tier's save
+    * then commit the serve marker so every serve tier's save
     * fingerprint refreshes. The stored CALIBRATION stays valid by
     * design: it is a property of the frozen structure, and the drift
     * report below is the honest signal for when that stops holding.
@@ -567,7 +577,7 @@ object AnnIvfPq {
           driftSampleSize)
         // sidecar FIRST (a crash after it leaves only harmless
         // unreferenced vectors), then the job-atomic coded append, then
-        // the pack delta, then the fingerprint marker
+        // the pack delta, then the serve commit
         if (AnnVecStore.exists(spark, path))
           AnnVecStore.appendSegment(spark, path, batch, idCol, vecCol): Unit
         codedBatch.select(col(idCol), col("_centroid"), col("codes"))
@@ -575,7 +585,7 @@ object AnnIvfPq {
         val conf = spark.sparkContext.hadoopConfiguration
         if (AnnServePack.exists(conf, path))
           AnnServePack.appendDelta(spark, path, codedBatch, idCol): Unit
-        touchAppendMarker(spark, path, nBatch)
+        commitServe(fsCheck, path)
         AnnAppendStats(nBatch, batchQuantMse, baseQuantMse,
           batchQuantMse / baseQuantMse)
       } finally codedBatch.unpersist(): Unit
@@ -629,12 +639,12 @@ object AnnIvfPq {
   /** Compact the serving artifacts after an append chain (the ANN
     * analogue of [[graft.cluster.IndexStore.vacuum]]'s housekeeping
     * role): every [[appendVectors]] adds one vecstore segment, one
-    * servepack delta, and one marker file — all O(batch) to write, but
-    * a LONG chain degrades the open/rerank paths (a rerank id probes
-    * each segment's range; the pack open replays every delta). This
-    * re-saves the sidecar as fresh per-range segments (distributed),
-    * re-builds the pack from the current coded table (deltas fold into
-    * the base arrays), and clears the append markers — one compaction
+    * servepack delta, and one coded-table file set — all O(batch) to
+    * write, but a LONG chain degrades the open/rerank paths (a rerank id
+    * probes each segment's range; the pack open replays every delta).
+    * This rewrites the coded table, re-saves the sidecar as fresh
+    * per-range segments (distributed), and re-builds the pack from the
+    * current coded table (deltas fold into the base arrays) — one compaction
     * after every N appends keeps both paths at their fresh-save shape.
     * `emb` must be the FULL current corpus (base + all appended
     * batches), exactly as a fresh [[saveVectorStore]] would get.
@@ -699,9 +709,7 @@ object AnnIvfPq {
     // BEFORE the pack re-save so the fresh pack carries no skip set
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
     if (hadPack) AnnServePack.save(spark, path): Unit
-    // markers served their purpose (fingerprint churn per mutation); the
-    // compaction itself re-touches the fingerprint via the meta swaps
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/appends"), true)
+    commitServe(fs, path)
     n
   }
 
@@ -718,8 +726,8 @@ object AnnIvfPq {
     * calibration is INVALIDATED by construction ([[loadCalibration]]
     * returns None — epoch mismatch): a re-trained geometry voids the old
     * probe-depth evidence, and serving re-calibrates before vouching
-    * again. Sidecar and pack re-save when present; tombstones and append
-    * markers fold away. Returns the retrained corpus size.
+    * again. Sidecar and pack re-save when present; tombstones fold away.
+    * Returns the retrained corpus size.
     */
   def retrain(
       spark: org.apache.spark.sql.SparkSession,
@@ -772,31 +780,14 @@ object AnnIvfPq {
               cbRaw, idCol, "_v").withColumnRenamed("vec_id", idCol), Seq(idCol))
             .select(col(idCol), col("_centroid"), col("codes")))
         }
-      // fresh epoch per saveIndex — the calibration invalidation
+      // fresh epoch per saveIndex — the calibration invalidation; the
+      // save also clears the tombstones and commits the serve marker, as
+      // do the sidecar and pack re-saves after it
       saveIndex(coded, centroids, cb, path, idCol, residual = residual)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/appends"), true)
       if (hadVecstore) AnnVecStore.save(corpus, path, idCol, vecCol): Unit
       if (hadPack) AnnServePack.save(spark, path): Unit
       n
     } finally corpus.unpersist(): Unit
-  }
-
-  /** One marker file per append under `<path>/appends/` — the save
-    * fingerprint lists the directory, so every serve tier (Scala memo,
-    * SQL registry) re-opens past its freshness window and sees the
-    * appended rows.
-    */
-  private def touchAppendMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String, n: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/appends")
-    if (!fs.exists(dir)) { fs.mkdirs(dir); () }
-    val o = fs.create(new org.apache.hadoop.fs.Path(dir,
-      s"append-${java.util.UUID.randomUUID()}.txt"), true)
-    try o.write(s"$n\n".getBytes("UTF-8"))
-    finally o.close()
   }
 
   /** Order-preserving parallel map over a serve batch on a bounded
@@ -917,8 +908,8 @@ object AnnIvfPq {
       maxLocalQueries: Int = 4096,
       codesServeCap: Long = 20000000L,
       localThreads: Int = 0): DataFrame = {
-    // freshness = one driver FS listing (no Spark job; a re-save
-    // mid-process changes the fingerprint). Marker + calibration +
+    // freshness = one stat of the commit marker (no Spark job; a re-save
+    // mid-process changes the fingerprint). Variant + calibration +
     // snapshot are per-save state from the fingerprint-keyed memo, so
     // the warm local path's ONLY Spark job is the query-batch collect.
     val st = serveState(spark, path)
@@ -959,8 +950,8 @@ object AnnIvfPq {
   /** The interactive serving entry point: query vectors already in hand
     * — the reference's per-frame probe loop shape
     * (`benchmarks/run.ts:38-42` measures exactly this). The warm path
-    * runs ZERO Spark jobs: freshness is one driver FS listing
-    * ([[epochFingerprint]]), then pure in-process arithmetic on the
+    * runs ZERO Spark jobs: freshness is one stat of the commit marker
+    * ([[serveFingerprint]]), then pure in-process arithmetic on the
     * memoized snapshot at the stored calibration's knobs — the same
     * rows, distances, and ranks [[serve]]/[[search]] return
     * (ServeLocalSpec pins all three equal).

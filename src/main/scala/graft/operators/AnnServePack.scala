@@ -251,6 +251,7 @@ object AnnServePack {
     val dest = new HPath(dir, "meta.txt")
     fs.delete(dest, false)
     require(fs.rename(tmp, dest), s"servepack meta commit rename failed at $path")
+    AnnIvfPq.commitServe(fs, path)
   }
 
   private def readLines(fs: FileSystem, p: HPath): Seq[String] = {

@@ -7,10 +7,11 @@ import org.apache.spark.sql.SparkSession
   * (r13 verdict #5): one codes-resident snapshot ([[AnnLocalCodes]]) per
   * index path, opened on first use, answering per-row evals with pure
   * in-process arithmetic + mmap rerank reads. Freshness is re-checked
-  * against the index save fingerprint at most every `freshnessMs` —
-  * per-ROW FS listings would dominate the ms-scale searches SQL rows
-  * make, so the SQL tier trades the Scala serve()'s per-call check for
-  * a bounded staleness window (a re-save is picked up within seconds).
+  * against the index save fingerprint (one stat of the commit marker)
+  * at most every `freshnessMs`, not per ROW — on an object store each
+  * stat is a round trip, so the SQL tier trades the Scala serve()'s
+  * per-call check for a bounded staleness window (a re-save is picked
+  * up within seconds).
   *
   * SESSION-FREE since r15 (r14 verdict #2): when the index path carries
   * a committed [[AnnServePack]] (flat-file serving artifact written at
@@ -62,7 +63,8 @@ object AnnServeRegistry {
   private val genCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** How long an opened snapshot may serve before re-checking the index
-    * save fingerprint (driver FS listing). Package-visible for specs.
+    * save fingerprint (one stat of the commit marker). Package-visible
+    * for specs.
     */
   private[graft] var freshnessMs: Long = 5000L
 

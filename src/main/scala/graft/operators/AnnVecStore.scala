@@ -110,7 +110,8 @@ object AnnVecStore {
   }
 
   /** Commit: write meta_new.txt, rename over meta.txt (atomic on HDFS
-    * and local FS — readers see the old complete meta or the new one).
+    * and local FS — readers see the old complete meta or the new one),
+    * then the index's serve commit.
     */
   private def writeMeta(fs: FileSystem, path: String, m: StoreMeta): Unit = {
     val dir = dirOf(path)
@@ -124,6 +125,7 @@ object AnnVecStore {
     finally out.close()
     fs.delete(dest, false)
     require(fs.rename(tmp, dest), s"vecstore meta commit rename failed at $path")
+    AnnIvfPq.commitServe(fs, path)
   }
 
   /** One segment writer: streams (id, vec) rows to `<stem>.ids.bin` /

@@ -51,11 +51,19 @@ object PlanBridge {
     * belong to the RDD inside the plan's `LogicalRDD` leaf; unpersisting
     * THAT releases them. Safe on any frame: non-checkpointed plans simply
     * have no LogicalRDD leaf (and an unpersisted RDD unpersist is a no-op).
+    *
+    * Freed through `SparkContext.unpersistRDD`, the call `RDD.unpersist`
+    * makes, without `RDD.unpersist`'s per-RDD "lineage has been truncated"
+    * WARN (hundreds per bench run). It drops the blocks, the
+    * persistent-RDD entry and the status store's storage entry, exactly
+    * as `RDD.unpersist` does; only the freed RDD object keeps its own
+    * storage-level field, and reading a freed checkpoint fails the same
+    * way either way (its blocks are its only data).
     */
   def unpersistCheckpointBlocks(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking): Unit
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking)
       case _ => ()
     }
 }

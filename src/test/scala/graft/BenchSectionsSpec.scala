@@ -132,6 +132,21 @@ class BenchSectionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains(name) && e.getMessage.contains(value))
   }
 
+  test("with one rep per query the cold first passes stay out of the contamination verdict") {
+    // one rep: q60's first pass is its cold run, its rerun is warm
+    val queries = Seq(Rerun("q60_neardup_components", 8.97, 0.33, ok = true))
+    val sections = Seq(Rerun("store_save_1m", 4.0, 3.6, ok = true))
+    val warm = JsonMethods.parse(render(rerunFields(queries, sections)))
+    assert(warm \ "suite_contaminated" == JBool(true))
+    val cold = JsonMethods.parse(render(rerunFields(queries, sections, coldQueries = true)))
+    assert(cold \ "rerun" \ "q60_neardup_components" \ "first" == JDouble(8.97))
+    assert(cold \ "rerun_total_ratio" == JDouble(3.6 / 4.0))
+    assert(cold \ "suite_contaminated" == JBool(false))
+    val queriesOnly = JsonMethods.parse(render(rerunFields(queries, Nil, coldQueries = true)))
+    assert(queriesOnly \ "rerun_total_ratio" == JNothing)
+    assert(queriesOnly \ "suite_contaminated" == JNothing)
+  }
+
   test("the serialized artifact parses with json4s") {
     val rungs = runAll(Seq(
       new Fake("wire_size", Seq(("ipc_bytes", 123.0, Tag.Count),

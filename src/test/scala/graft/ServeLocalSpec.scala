@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AnnIvf, AnnIvfPq, AnnPq}
+import graft.operators.{AnnIvf, AnnIvfPq, AnnPq, AnnServePack}
 
 /** The one-call serving path's r12 upgrades:
   *
@@ -18,6 +18,8 @@ import graft.operators.{AnnIvf, AnnIvfPq, AnnPq}
   *    identical to the broadcast path.
   *  - isResidual propagates read errors on an EXISTING variant marker
   *    (r12 advice): only a genuinely absent marker means legacy-raw.
+  *  - the serve commit marker: every serve-visible writer moves the
+  *    fingerprint, and a warm serveVectors stats only that marker.
   */
 class ServeLocalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -139,8 +141,8 @@ class ServeLocalSpec extends AnyFunSuite {
       .sorted
     assert(flat == rows(AnnIvfPq.serve(spark, d, queries, emb)),
       "serveVectors diverged from serve()")
-    // warm path: zero jobs — freshness is a driver FS listing, the rest
-    // is in-process arithmetic on the memoized snapshot
+    // warm path: zero jobs — freshness is one stat of the commit marker,
+    // the rest is in-process arithmetic on the memoized snapshot
     val sc = spark.sparkContext
     sc.setJobGroup("serve-vectors-warm", "zero-job probe")
     val again = try AnnIvfPq.serveVectors(spark, d, qvecs, emb)
@@ -166,6 +168,60 @@ class ServeLocalSpec extends AnyFunSuite {
       hs.map(h => (q, h.neighborId, h.dist, h.rk)) }.sorted == flat)
   }
 
+  test("serve commit marker: every writer moves the fingerprint; a warm serveVectors stats only the marker; a marker-less index still serves") {
+    val (coded, centroids, cb) = built
+    val d = java.nio.file.Files.createTempDirectory("graft_serve_commit").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fps = scala.collection.mutable.ArrayBuffer(AnnIvfPq.serveFingerprint(conf, d))
+    def commits(writer: String)(f: => Any): Unit = {
+      f
+      val fp = AnnIvfPq.serveFingerprint(conf, d)
+      assert(fp.nonEmpty && !fps.contains(fp), s"$writer did not move the serve fingerprint")
+      fps += fp
+    }
+    commits("saveIndex")(AnnIvfPq.saveIndex(coded, centroids, cb, d))
+    commits("saveCalibration")(AnnIvfPq.saveCalibration(spark, d, cal))
+    commits("a back-to-back saveCalibration")(AnnIvfPq.saveCalibration(spark, d, cal))
+    commits("saveVectorStore")(AnnIvfPq.saveVectorStore(emb, d))
+    commits("AnnServePack.save")(AnnServePack.save(spark, d))
+    val fs = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create(d), conf)
+    (1 to 20).foreach(i => commits(s"commit $i within a few clock ticks")(AnnIvfPq.commitServe(fs, d)))
+
+    val qvecs = emb.where(col("vec_id") < 20)
+      .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    def served(): Seq[(Long, Seq[graft.operators.AnnHit])] =
+      AnnIvfPq.serveVectors(spark, d, qvecs, emb).getOrElse(fail("the index must serve locally"))
+    val cold = served()
+    // a warm call through a filesystem that records every metadata call
+    // under the index: exactly one stat, of the marker
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    CountingLocalFs.under = d
+    CountingLocalFs.calls.clear()
+    val warm = try served() finally {
+      CountingLocalFs.under = null
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    assert(warm == cold)
+    assert(CountingLocalFs.calls.toArray.toSeq == Seq(s"getFileStatus $d/_serve_commit"),
+      s"warm serveVectors made these metadata calls: ${CountingLocalFs.calls}")
+
+    // an index saved before the marker existed reads as "" and serves
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$d/_serve_commit"), false))
+    assert(AnnIvfPq.serveFingerprint(conf, d) == "")
+    assert(served() == cold)
+
+    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
+    commits("deleteVectors")(AnnIvfPq.deleteVectors(spark, d, Seq(maxId)))
+    commits("appendVectors")(AnnIvfPq.appendVectors(spark, d,
+      emb.where(col("vec_id") < 4).withColumn("vec_id", col("vec_id") + (maxId + 1))))
+    assert(!new java.io.File(d, "appends").exists())
+    commits("compactServingArtifacts")(AnnIvfPq.compactServingArtifacts(spark, d))
+    commits("retrain")(AnnIvfPq.retrain(spark, d))
+  }
+
   test("isResidual: absent marker is legacy-raw; a CORRUPT existing marker throws instead of defaulting (r12 advice)") {
     val (coded, centroids, cb) = built
     val d = java.nio.file.Files.createTempDirectory("graft_serve_marker").toString
@@ -183,4 +239,23 @@ class ServeLocalSpec extends AnyFunSuite {
     out.write("not parquet".getBytes("UTF-8")); out.close()
     intercept[Exception] { AnnIvfPq.isResidual(spark, d) }
   }
+}
+
+/** The local filesystem, recording each metadata call made under `under`. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  private def record(op: String, p: Path): Unit = {
+    val under = CountingLocalFs.under
+    if (under != null && p.toUri.getPath.startsWith(under))
+      CountingLocalFs.calls.add(s"$op ${p.toUri.getPath}"): Unit
+  }
+  override def getFileStatus(p: Path) = { record("getFileStatus", p); super.getFileStatus(p) }
+  override def listStatus(p: Path) = { record("listStatus", p); super.listStatus(p) }
+  override def exists(p: Path) = { record("exists", p); super.exists(p) }
+  override def open(p: Path, bufferSize: Int) = { record("open", p); super.open(p, bufferSize) }
+}
+
+object CountingLocalFs {
+  @volatile var under: String = null
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
